@@ -7,8 +7,9 @@ Reference behaviors re-expressed:
   committer replaces boto3 PUTs on a real cluster).
 - 10k-row chunked part-files (dag-knlp.py:126, 139-145) →
   `maxRecordsPerFile` — Spark's normal multi-part output.
-- `COPY ... JSON 'auto'` schema-on-read name binding
-  (dag-knlp.py:202-205) → `spark.read.json` + select to DDL order.
+- `COPY ... JSON 'auto'` name binding into a fixed-DDL table
+  (dag-knlp.py:202-205) → `spark.read.schema(ddl).json` + select to
+  DDL order.
 - `CREATE TABLE IF NOT EXISTS` + `INSERT INTO ... SELECT`
   (dag-knlp.py:24-63, 66-71) → saveAsTable / insertInto.
 """
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def write_json_lines(df: DataFrame, path: str, max_records_per_file: int = 10_000, mode: str = "overwrite") -> None:
@@ -33,13 +35,24 @@ def read_json_auto(
     columns: list[str] | None = None,
     mode: str = "PERMISSIVE",
     corrupt_col: str | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
-    """S6: bulk JSON load with name-based binding — `spark.read.json`
-    infers the schema and binds by key name exactly like
+    """S6: bulk JSON load with name-based binding, like
     `COPY ... JSON 'auto'` (dag-knlp.py:202-205); a directory path
     loads every part-file (the reference's prefix COPY,
     dag-knlp.py:231-239). Pass `columns` to project to DDL order
     (the explicit column-list COPY variant, dag-knlp.py:202).
+
+    Pass `schema` when the target table's DDL is known (the reference
+    COPYs into fixed tables). Keys then bind by name to its fields:
+    a missing key reads as NULL, keys outside it are ignored, and no
+    inference pass runs, so building the DataFrame submits no Spark
+    job (without it Spark scans all the data once just to infer).
+    `columns` defaults to the schema's field names. Without a schema
+    only keys that occur somewhere in the data become columns, and the
+    JSON writer omits NULL fields: a column that is NULL in every
+    staged row, or every column of an empty staging directory, is
+    missing from the inferred schema and selecting it fails.
 
     Malformed-record policy (the part Redshift's COPY error table
     handles in the reference): PERMISSIVE (default) nulls bad rows —
@@ -50,6 +63,14 @@ def read_json_auto(
     reader = spark.read.option("mode", mode)
     if corrupt_col is not None:
         reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+    if schema is not None:
+        if columns is None:
+            columns = schema.fieldNames()
+        if corrupt_col is not None and corrupt_col not in schema.fieldNames():
+            # the reader fills the corrupt-record column only if the
+            # schema declares it
+            schema = T.StructType(schema.fields + [T.StructField(corrupt_col, T.StringType())])
+        reader = reader.schema(schema)
     df = reader.json(path)
     if columns is not None:
         keep = list(columns) + ([corrupt_col] if corrupt_col in df.columns else [])

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_knlp_spark.catalog import load_table
 from etl_knlp_spark.sources.io import (
@@ -61,6 +62,54 @@ def test_corrupt_json_records_are_quarantined(spark, tmp_path):
     # DROPMALFORMED discards the bad line instead
     dropped = read_json_auto(spark, str(d), columns=["a", "b"], mode="DROPMALFORMED")
     assert dropped.count() == 3
+    # a schema-bound load quarantines the same line
+    schema = T.StructType([T.StructField("a", T.LongType()), T.StructField("b", T.StringType())])
+    bound = read_json_auto(spark, str(d), schema=schema, corrupt_col="_bad")
+    assert bound.columns == ["a", "b", "_bad"]
+    assert [r["_bad"] for r in bound.collect() if r["_bad"] is not None] == [bad[0]["_bad"]]
+
+
+def _strings(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
+def _staged(tmp_path) -> str:
+    d = tmp_path / "staged"
+    d.mkdir()
+    (d / "part-0.json").write_text(
+        '{"a": "1", "b": "x", "extra": "e1"}\n{"b": "y", "a": "2", "extra": "e2"}\n'
+    )
+    return str(d)
+
+
+def test_schema_bound_load_binds_keys_by_name(spark, tmp_path):
+    df = read_json_auto(spark, _staged(tmp_path), schema=_strings("b", "a"))
+    assert df.columns == ["b", "a"]
+    assert sorted(tuple(r) for r in df.collect()) == [("x", "1"), ("y", "2")]
+
+
+def test_schema_bound_load_reads_a_missing_key_as_null(spark, tmp_path):
+    """A key absent from every record (the JSON writer omits NULL
+    fields) is still a column, all NULL — inference would drop it."""
+    df = read_json_auto(spark, _staged(tmp_path), schema=_strings("a", "missing"))
+    assert df.columns == ["a", "missing"]
+    assert sorted(tuple(r) for r in df.collect()) == [("1", None), ("2", None)]
+
+
+def test_schema_bound_load_ignores_extra_keys(spark, tmp_path):
+    df = read_json_auto(spark, _staged(tmp_path), schema=_strings("a"))
+    assert df.columns == ["a"]
+    assert sorted(r["a"] for r in df.collect()) == ["1", "2"]
+
+
+def test_schema_bound_load_submits_no_job(spark, tmp_path, jobs_under_group):
+    """Binding to a schema skips the inference scan: building the
+    DataFrame submits no Spark job, where inferring submits one."""
+    path = _staged(tmp_path)
+    inferred, _ = jobs_under_group("inferred", lambda: read_json_auto(spark, path, columns=["a"]))
+    assert inferred
+    bound = jobs_under_group("bound", lambda: read_json_auto(spark, path, schema=_strings("a")))
+    assert bound == ([], set())
 
 
 def test_events_nanos_timestamp_loads(spark, sf_dir):

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
-import pytest
+import os
 
-from etl_knlp_spark.plans.pipeline import run_reference_pipeline
+import pytest
+from pyspark.errors import AnalysisException
+
+from etl_knlp_spark.plans.pipeline import parse_stage, run_reference_pipeline
 
 # word_id 5 has langlinks in BOTH en and ja (the §2.3 fan-out quirk);
 # word_id 9 links only ja; 42 has no langlink (left-join NULL).
@@ -13,14 +16,20 @@ LANGLINK = "5,en,Jimmy Carter),(5,ja,ジミー・カーター),(9,ja,数学\n"
 HANJA = "수학:數學:산수, 수식\n가:家:가족\n"
 
 
+def write_raw(raw, wiki=WIKI, langlink=LANGLINK, hanja=HANJA) -> str:
+    """The three raw files; a None body leaves that file out."""
+    raw.mkdir(parents=True, exist_ok=True)
+    for name, body in (("wiki_index.txt", wiki), ("langlink.txt", langlink), ("hanja.txt", hanja)):
+        if body is not None:
+            (raw / name).write_text(body, encoding="utf-8")
+    return str(raw)
+
+
 @pytest.fixture(scope="module")
 def result(spark, tmp_path_factory):
-    raw = tmp_path_factory.mktemp("raw")
-    (raw / "wiki_index.txt").write_text(WIKI, encoding="utf-8")
-    (raw / "langlink.txt").write_text(LANGLINK, encoding="utf-8")
-    (raw / "hanja.txt").write_text(HANJA, encoding="utf-8")
+    raw = write_raw(tmp_path_factory.mktemp("raw"))
     stage = str(tmp_path_factory.mktemp("stage"))
-    return run_reference_pipeline(spark, str(raw), stage)
+    return run_reference_pipeline(spark, raw, stage)
 
 
 def test_tables_loaded_with_identity(result):
@@ -66,6 +75,55 @@ def test_ragged_wiki_title_survives_parse(result):
     the full title reaches the dimension table intact."""
     rows = {r["word_id"]: r for r in result.dimension.collect()}
     assert rows["42"]["korean"] == "역사: 고대"
+
+
+def test_all_null_staged_column_loads_as_null(spark, tmp_path):
+    """The JSON writer omits NULL fields, so a column NULL in every row
+    never appears in the staged files (here: hanja lines with no
+    examples field). The load binds to the DDL schema, so the column
+    still exists, reads as NULL, and the hanja join still works."""
+    raw = write_raw(tmp_path / "raw", hanja="수학:數學\n가:家\n")
+    r = run_reference_pipeline(spark, raw, str(tmp_path / "stage"))
+    assert r.korean_hanjya.columns == ["korean", "hanjya", "examples", "data_id"]
+    assert [row["examples"] for row in r.korean_hanjya.collect()] == [None, None]
+    rows = {row["word_id"]: row for row in r.dimension.collect()}
+    assert rows["9"]["hanjya"] == "數學"
+
+
+def test_empty_input_fails_the_row_count_check(spark, tmp_path):
+    """An empty wiki index stages no titles; the load still has its DDL
+    columns, so the reference's row-count check is what fails
+    (dag-knlp.py:253-258), not column resolution."""
+    raw = write_raw(tmp_path / "raw", wiki="")
+    with pytest.raises(ValueError, match=r"Data quality check failed. Rows 0 < 1"):
+        run_reference_pipeline(spark, raw, str(tmp_path / "stage"))
+
+
+def test_parse_stage_jobs_carry_the_callers_job_group(spark, tmp_path, jobs_under_group):
+    """The three staging writes run on their own threads, yet every job
+    they submit carries the job group set on the calling thread."""
+    raw = write_raw(tmp_path / "raw")
+    grouped, ungrouped = jobs_under_group(
+        "parse-stage", lambda: parse_stage(spark, raw, str(tmp_path / "stage"))
+    )
+    assert len(grouped) >= 3  # one write per table
+    assert ungrouped == set()
+
+
+def test_parse_stage_failure_waits_for_the_other_writes(spark, tmp_path):
+    """A branch that fails (hanja.txt missing) raises from parse_stage
+    only after the other two branches have finished: their writes have
+    committed and no job is left running."""
+    sc = spark.sparkContext
+    raw = write_raw(tmp_path / "raw", hanja=None)
+    stage = tmp_path / "stage"
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        parse_stage(spark, raw, str(stage))
+    assert os.path.exists(stage / "titles" / "_SUCCESS")
+    assert os.path.exists(stage / "langlinks" / "_SUCCESS")
+    assert not (stage / "hanjya").exists()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert sc.statusTracker().getActiveJobsIds() == []
 
 
 def test_corpus_funnel_is_monotone_and_consistent(spark, sf_dir):
